@@ -114,32 +114,6 @@ def read_spans(path: str) -> list[dict]:
     return spans
 
 
-def self_times(spans: list[dict]) -> dict[str, float]:
-    """Seconds per span name of duration minus the part covered by
-    its direct children (children may overlap each other)."""
-    kids: dict[int, list[tuple[float, float]]] = {}
-    for s in spans:
-        if s["parent"] is not None:
-            kids.setdefault(s["parent"], []).append((s["start"], s["end"]))
-    out: dict[str, float] = {}
-    for s in spans:
-        covered, cur_lo, cur_hi = 0.0, None, None
-        for lo, hi in sorted(kids.get(s["id"], [])):
-            lo, hi = max(lo, s["start"]), min(hi, s["end"])
-            if hi <= lo:
-                continue
-            if cur_hi is None or lo > cur_hi:
-                if cur_hi is not None:
-                    covered += cur_hi - cur_lo
-                cur_lo, cur_hi = lo, hi
-            else:
-                cur_hi = max(cur_hi, hi)
-        if cur_hi is not None:
-            covered += cur_hi - cur_lo
-        out[s["name"]] = out.get(s["name"], 0.0) + (s["end"] - s["start"]) - covered
-    return out
-
-
 # --------------------------------------------------------------------
 # Spark event log
 # --------------------------------------------------------------------
@@ -312,11 +286,27 @@ def cpu_seconds(pids) -> float:
     return total / tick
 
 
+def cpu_jiffies() -> list[int]:
+    """The host's aggregate CPU counters (/proc/stat: user ... steal)."""
+    with open("/proc/stat") as fh:
+        return [int(x) for x in fh.readline().split()[1:9]]
+
+
+def steal_share(start: list[int]) -> float:
+    """Share of all CPU time since ``start`` that the hypervisor gave to
+    other guests: on a shared host it marks runs slowed from outside."""
+    d = [b - a for a, b in zip(start, cpu_jiffies())]
+    return d[7] / max(1, sum(d))
+
+
 def driver_heap_mb() -> int:
-    """A driver heap that fits the host: a quarter of RAM, at most 2 GiB."""
+    """A driver heap that fits the host: a quarter of RAM, at most 1 GiB.
+    With 2 GiB the JVM grew its heap to a different size in every run,
+    and the IQR/median of peak RSS over ten runs reached 0.28; at 1 GiB
+    it was 0.09-0.16, at the same speed."""
     with open("/proc/meminfo") as fh:
         total_kb = next(int(l.split()[1]) for l in fh if l.startswith("MemTotal:"))
-    return max(512, min(2048, total_kb // 1024 // 4))
+    return max(512, min(1024, total_kb // 1024 // 4))
 
 
 def cpu_model() -> str:
@@ -341,6 +331,7 @@ class RunEnv:
             os.makedirs(os.path.join(self.work, d))
         self.cpus = spark_cpus()
         self.heap_mb = driver_heap_mb()
+        self.jiffies_start = cpu_jiffies()
         self.record = {"seed": seed, "nproc": nproc(), "spark_cpus": self.cpus,
                        "cpu_model": cpu_model(),
                        "loadavg_start": os.getloadavg()[0], "driver_heap_mb": self.heap_mb,

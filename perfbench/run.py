@@ -1,4 +1,4 @@
-"""wire-spark benchmark: one command, four workloads.
+"""wire-spark benchmark: one command, three workloads.
 
     python3 perfbench/run.py --workload NAME --seed N --seconds S --trace 0|1
 
@@ -22,7 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from common import ROOT, RunEnv  # noqa: E402
+from common import ROOT, RunEnv, steal_share  # noqa: E402
 
 # per-layer metric prefixes each workload must report; every other
 # declared per-layer metric belongs to a layer the workload does not use
@@ -99,6 +99,7 @@ def main(argv=None) -> int:
 
     print(f"# wire-spark perfbench  workload={args.workload}  trace={args.trace}  "
           f"run_wall_s={wall:.1f}")
+    env.record["host_steal_share"] = round(steal_share(env.jiffies_start), 4)
     print("# environment " + json.dumps(env.record, sort_keys=True))
     for name, m in e2e.items():
         print(f"{name:<28} {m['value']:>14.4f} {m['unit']}")

@@ -5,17 +5,19 @@ Both phases read JSON lines through the text file source
 ``with_envelope`` -> ``uppercase_json_string``.
 
 * etl_backlog (closed loop): drain a seeded backlog, about 2% of it
-  malformed, through ``with_dlq`` with ``availableNow``; repeat on fresh
-  checkpoints until the time is up.  Gives the workload's throughput:
-  the per-row cost of sources, transforms and sinks, including the DLQ
-  split that recomputes every batch.
+  malformed, through ``with_dlq`` with ``availableNow``, a fixed number
+  of times on fresh checkpoints.  Gives the workload's throughput:
+  the cost per drained row of sources, transforms and sinks, including
+  the DLQ split that recomputes every batch (at this size mostly its
+  four jobs per batch).
 * etl_live (open loop): one generator thread lands small files on a
   fixed schedule while a ``PipelineRegistry`` pipeline (json file sink,
   one micro-batch a second) runs.  Gives the workload's latency, from
   each row's scheduled creation time to the commit of the batch that
   holds it, so per-batch fixed costs (listing, planning, WAL and
-  commit) show.  A per-row speed-up should move the throughput and
-  not the latency; a per-batch speed-up the other way round.
+  commit) show.  Its sink is a plain json sink, so a change to
+  ``with_dlq`` should move the throughput and not the latency, and a
+  change to the streaming per-batch overhead mostly the latency.
 """
 
 from __future__ import annotations
@@ -31,17 +33,30 @@ from common import (Session, Tracer, common_layers, find_event_log, median,
                     parse_event_log, percentile, sum_groups)
 import datagen
 
-BACKLOG_ROWS, BACKLOG_FILES, FILES_PER_TRIGGER = 8_000, 8, 4
-LIVE_INTERVAL_S, LIVE_ROWS_PER_FILE = 0.25, 250          # 1000 rows/s
+# The backlog drains in one batch.  With_dlq costs about 2.3 s per batch
+# up to 16000 rows (four jobs per batch and their Python workers): 8000
+# and 16000 rows per batch took as long, and 32000 rows in one batch took
+# twice that.  One 16000-row batch keeps a drain short enough for a run
+# to afford MIN_DRAINS of them for the median.
+BACKLOG_ROWS, BACKLOG_FILES, FILES_PER_TRIGGER = 16_000, 8, 8
+# A run does a fixed amount of work, set by --seconds alone, so every run
+# stops at the same point of the JIT warm-up curve: backlog drains, about
+# DRAIN_NOMINAL_S each on a 4-core host, for half of --seconds but at
+# least MIN_DRAINS of them, then the live phase for the other half.
+DRAIN_NOMINAL_S = 3.0
+MIN_DRAINS = 3
+# The warm-up drain costs about what an 800-row one does, but runs the
+# per-row code often enough for the JIT to compile it: after an 800-row
+# warm-up, throughput still rose by half over the next five drains.
+WARMUP_ROWS = 8_000
+# The live phase offers 1000 rows/s, a fifth or less of the backlog
+# throughput (4900-5900 rows/s), so the pipeline keeps up and its latency
+# is per-batch cost, not queueing.
+LIVE_INTERVAL_S, LIVE_ROWS_PER_FILE = 0.25, 250
 # A fixed micro-batch interval: with the default trigger each batch is
 # as large as the previous one was slow, which amplified host drift into
 # a 0.31 run-to-run spread of the latency median over ten runs.
 LIVE_TRIGGER_S = 1
-# A run does a fixed amount of work, set by --seconds alone: one drain
-# of the backlog takes about this long on a 4-core host, and the live
-# generator runs for --seconds.  Fixed work keeps every run at the same
-# point of the JIT warm-up curve.
-DRAIN_NOMINAL_S = 8.0
 _ID = re.compile(r"g\d{8}", re.IGNORECASE)
 
 
@@ -123,14 +138,7 @@ def _drain(sess: Session, env, src_dir: str, tag: str, tracer: Tracer) -> dict:
     if q.exception() is not None:
         raise RuntimeError(f"drain {tag} failed: {q.exception()}")
     prog = _progress(q)
-    commits = _commit_times(ckpt)
-    # numInputRows counts every re-read of a batch (the DLQ split reads
-    # it more than once), so rows per batch are taken from its files
-    reads = sum(p.numInputRows for p in prog)
-    rows = _count_lines(src_dir)
-    lat = [(commits[p.batchId] - t0, p.numInputRows * rows / reads) for p in prog]
-    return {"wall": wall, "rows": rows, "reads": reads, "lat": lat,
-            "progress": prog, "jobs": sess.jobs_in_group(str(q.runId)),
+    return {"wall": wall, "rows": _count_lines(src_dir), "progress": prog, "jobs": sess.jobs_in_group(str(q.runId)),
             "group": str(q.runId), "out": out, "dlq": dlq}
 
 
@@ -157,9 +165,13 @@ def _check_drain(d: dict, meta: dict) -> list[str]:
     return errs
 
 
+def n_drains(seconds: float) -> int:
+    return max(MIN_DRAINS, round(seconds / 2 / DRAIN_NOMINAL_S))
+
+
 def _backlog_loop(sess, env, src, meta, seconds, tracer, tag) -> tuple[list[dict], int]:
     drains, failed = [], 0
-    for i in range(max(1, round(seconds / DRAIN_NOMINAL_S))):
+    for i in range(n_drains(seconds)):
         cpu0 = sess.cpu_s()
         d = _drain(sess, env, src, f"{tag}-{i}", tracer)
         d["cpu_s"] = sess.cpu_s() - cpu0
@@ -172,7 +184,8 @@ def _backlog_loop(sess, env, src, meta, seconds, tracer, tag) -> tuple[list[dict
 
 
 def _rows_per_s(drains: list[dict]) -> float:
-    return sum(d["rows"] for d in drains) / sum(d["wall"] for d in drains)
+    """Median over the drains, so one slow drain does not set it."""
+    return median([d["rows"] / d["wall"] for d in drains])
 
 
 # --------------------------------------------------------------------
@@ -276,8 +289,9 @@ def _latency(r: dict) -> dict:
 
 
 def _measure(sess, env, src, meta, seconds, tracer, tag, first_id) -> tuple[list, dict, int]:
+    """Backlog drains for about half of ``seconds``, then the live phase for the other half."""
     drains, failed = _backlog_loop(sess, env, src, meta, seconds, tracer, f"{tag}-backlog")
-    live = _live_once(sess, env, seconds, f"{tag}-live", tracer, first_id)
+    live = _live_once(sess, env, seconds / 2, f"{tag}-live", tracer, first_id)
     return drains, live, failed + live["failed"]
 
 
@@ -288,10 +302,9 @@ def run(env, seconds: float, trace: bool) -> dict:
     src = env.path("backlog")
     meta = datagen.write_backlog(env.seed, src, BACKLOG_ROWS, BACKLOG_FILES)
     warm = env.path("warm")
-    warm_meta = datagen.write_backlog(env.seed + 1, warm, 2 * FILES_PER_TRIGGER * 100,
-                                      2 * FILES_PER_TRIGGER)
+    warm_meta = datagen.write_backlog(env.seed + 1, warm, WARMUP_ROWS, BACKLOG_FILES)
     datagen_s = time.perf_counter() - t1
-    # warm-up: a small drain through the same source, transforms and sinks
+    # warm-up: a smaller drain through the same source, transforms and sinks
     t2 = time.perf_counter()
     w = _drain(sess, env, warm, "warm", Tracer(False))
     warmup_s = time.perf_counter() - t2
@@ -323,7 +336,8 @@ def run(env, seconds: float, trace: bool) -> dict:
     sess.stop()
     tracer = Tracer(True)
     tsess = Session(env, event_log=True)
-    tdrains, tlive, f = _measure(tsess, env, src, meta, seconds, tracer, "t", 50_000_000)
+    # the same backlog and the same live stream as the untraced measurement
+    tdrains, tlive, f = _measure(tsess, env, src, meta, seconds, tracer, "t", 0)
     tsess.stop()
     # single-core baseline of the same drain
     one = Session(env, master="local[1]")

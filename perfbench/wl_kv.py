@@ -28,7 +28,7 @@ import datagen
 KEYS_PER_CLIENT = 100
 # A run issues a fixed, seeded number of requests set by --seconds alone:
 # about this many per second complete on a 4-core host with 10% writes.
-NOMINAL_OPS_PER_S = 16
+NOMINAL_OPS_PER_S = 20
 WARMUP_OPS_PER_CLIENT = 10    # one write per client, so reads after writes are warm too
 
 
@@ -208,8 +208,9 @@ def run(env, seconds: float, trace: bool) -> dict:
     if not trace:
         return res
 
+    # a second service, warmed up the same way, replays the same streams
     tracer = Tracer(True)
-    t = _session(env, env.seed + 1, seconds, tracer, event_log=True)
+    t = _session(env, env.seed, seconds, tracer, event_log=True)
     res["attempted"] += t["attempted"]
     res["failed"] += t["failed"]
     log_dir = env.path("eventlog")
