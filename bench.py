@@ -30,119 +30,9 @@ def run_query(fn, spark, sf_dir: str) -> float:
     return time.perf_counter() - t0
 
 
-# Reference calibration, pinned on the r14 builder host (idle
-# local[32], 16g heap — the host whose BENCH_LOCAL_r* numbers anchor
-# the cross-round series).  ``value_host_corrected`` scales each run's
-# raw sum by REF/measured on the CPU-saturation probe, so a bench
-# taken on a contended host (r13 driver run: all 185 queries uniformly
-# ~2x the builder's same-code numbers, while the old scheduling-only
-# probes moved just +20% — they sleep-wait and barely touch the CPUs)
-# still yields a number comparable with the rest of the series.
-# Pinned r14: median-of-session-medians 1442/1715/1789 ms on the
-# builder host (three fresh 16g local[32] sessions, fresh-plan reps).
-_REF_CALIBRATION = {"cpu_saturate_ms": 1700.0}
-
-
-def host_correction_factor(measured_cpu_ms: float | None) -> float:
-    """Multiplier that maps a raw bench sum to its host-corrected
-    value, from the run's CPU-saturation probe (SCALE.md round-14):
-    1.0 inside a 1.3x deadband of the pinned reference (ambient probe
-    jitter is ±12% — healthy rounds must not be rescaled by noise),
-    then a CONTINUOUS blend ``1.3*ref/measured`` beyond it, floored
-    at 0.3 (a >4.3x probe blowup indicts the probe, not the queries).
-
-    The blend corrects only the EXCESS over the deadband, so the
-    factor is exactly 1.0 at the boundary and degrades smoothly —
-    the r14 form jumped 1.0 -> ~0.76 across the edge, letting ±1% of
-    probe noise swing the headline by ~24% and making borderline
-    rounds bimodal across the series (ADVICE r14).  The idle-host
-    case (measured ~= ref) stays a clean 1.0; a genuinely k-fold
-    oversubscribed host (measured ~= k*ref, k >> 1.3) corrects by
-    ~1.3/k — within 30% of the old ref/measured asymptote, and the
-    deadband's intent (never rescale a healthy round) is preserved
-    without the discontinuity."""
-    ref = _REF_CALIBRATION["cpu_saturate_ms"]
-    if not measured_cpu_ms:
-        return 1.0
-    return max(0.3, min(1.0, 1.3 * ref / measured_cpu_ms))
-
-
-def host_calibration(spark, cpu_reps: int = 5) -> dict:
-    """Measure THIS host's scheduling overhead AND effective parallel
-    CPU throughput so cross-round bench sums are comparable even when
-    the sandbox is oversubscribed (round-13 lesson: the driver-run
-    bench doubled uniformly across all 185 queries with no code delta;
-    the scheduling probes below moved only +20% because a mostly-idle
-    probe under-measures CPU contention by construction).
-
-    Three probes, each median-of-7:
-
-    - ``collect_1stage_ms`` / ``count_2stage_ms``: a 1-stage 32-task
-      ``collect`` vs a 2-stage ``count`` over the same tiny DataFrame;
-      the delta ``extra_stage_ms`` is pure per-stage machinery (the
-      round-7 fixed-overhead model — kept for continuity, all raw
-      inputs stay in the artifact).
-    - ``cpu_saturate_ms``: a fixed CPU-bound job — 400M ``range`` rows
-      across 32 tasks, a 4-deep ``xxhash64`` chain per row, 64-group
-      aggregate — that keeps every executor thread busy ~1.4 s (idle
-      builder host) with trivial memory/shuffle footprint.  Under
-      k-fold CPU oversubscription its wall time scales ~k, which is
-      exactly the signal the scheduling probes miss; the ratio vs
-      ``_REF_CALIBRATION`` drives ``value_host_corrected``.  The plan
-      is REBUILT each rep with a distinct seed literal: the
-      DAGScheduler caches completed shuffle-map-stage output per RDD
-      graph, so re-collecting one DataFrame re-runs only the final
-      64-row stage and measures nothing (how the first draft of this
-      probe read 30 ms for 4B rows)."""
-    import statistics
-
-    from pyspark.sql import functions as F
-
-    df = spark.range(0, 32_000, 1, 32)
-    df.collect()
-    df.count()  # warm codegen for both shapes
-    one_stage, two_stage = [], []
-    for _ in range(7):
-        t0 = time.perf_counter()
-        df.collect()
-        one_stage.append(time.perf_counter() - t0)
-        t0 = time.perf_counter()
-        df.count()
-        two_stage.append(time.perf_counter() - t0)
-    one = statistics.median(one_stage)
-    two = statistics.median(two_stage)
-
-    # CPU-saturation probe: memory-trivial (64 groups), shuffle-trivial
-    # (64 partial-agg rows per task), all-thread CPU-bound.
-    def cpu_run(seed: int) -> float:
-        h = F.col("id")
-        for i in range(4):
-            h = F.xxhash64(h, F.lit(seed * 1000 + i))
-        cpu_df = (
-            spark.range(0, 400_000_000, 1, 32)
-            .select((h % 64).alias("b"), (h % 1_000_000).alias("v"))
-            .groupBy("b")
-            .agg(F.sum("v").alias("s"), F.count("*").alias("c"))
-            .select(F.sum(F.col("s") + F.col("c")).alias("t"))
-        )
-        t0 = time.perf_counter()
-        cpu_df.collect()
-        return time.perf_counter() - t0
-
-    cpu_run(-1)  # warm codegen for the probe shape
-    cpu = [cpu_run(s) for s in range(cpu_reps)]
-    return {
-        "collect_1stage_ms": round(one * 1000.0, 1),
-        "count_2stage_ms": round(two * 1000.0, 1),
-        "extra_stage_ms": round(max(0.0, two - one) * 1000.0, 1),
-        "cpu_saturate_ms": round(statistics.median(cpu) * 1000.0, 1),
-        "cpu_saturate_ref_ms": _REF_CALIBRATION["cpu_saturate_ms"],
-    }
-
-
 def _job_stats(spark, group: str) -> tuple[int, int]:
     """(n_jobs, n_stages) Spark ran for the job group ``group`` —
-    the mechanical inputs for host-overhead correction."""
+    counts that, unlike wall time, do not move with host load."""
     try:
         tracker = spark.sparkContext.statusTracker()
         jobs = tracker.getJobIdsForGroup(group)
@@ -347,12 +237,11 @@ def _median_latency(probe, runs: int = 3) -> dict:
     the per-metric MEDIAN across successful runs, with every per-run
     profile preserved under ``runs``.
 
-    Median-of-3 is the same comparability fix host_calibration gave
-    throughput: one GC pause / page-cache miss can double a single
-    run's p99 on this shared JVM, and a cross-round diff of single
-    runs then reads pure noise as a regression.  Metrics are combined
-    per-key (p50_ms/p99_ms/...) rather than pooling raw latencies so
-    a slow run cannot dominate the tail of a pooled distribution."""
+    One GC pause / page-cache miss can double a single run's p99 on
+    a shared JVM, and a diff of single runs then reads pure noise as
+    a regression.  Metrics are combined per-key (p50_ms/p99_ms/...)
+    rather than pooling raw latencies so a slow run cannot dominate
+    the tail of a pooled distribution."""
     profiles = []
     for i in range(runs):
         try:
@@ -380,79 +269,6 @@ def _median_latency(probe, runs: int = 3) -> dict:
 #: full 125-query dict overflowed the driver's stdout-tail capture in
 #: rounds 1-6 -> ``parsed: null``; the complete dict now goes to
 #: BENCH_DETAIL.json instead).
-def suspect_host_bursts(
-    timings: dict[str, float],
-    repo_dir: str,
-    prev: dict[str, float] | None = None,
-    unchanged: set[str] | None = None,
-    sf: float | None = None,
-) -> dict:
-    """Machine-label per-query HOST bursts (VERDICT r14 #4): a query
-    whose wall time is >2x its value in the newest committed
-    builder-local detail, while its kernel/oracle hash is UNCHANGED
-    from the driver-verified KERNEL_BASELINE, is a host artifact
-    (mid-run contention burst, oversubscribed driver host) rather
-    than a code regression — r13's 5.1x range_join_price_bands spike
-    needed judge archaeology to adjudicate; this ships the
-    adjudication in the artifact.  Only pairs where the previous
-    local time is >= 0.5 s are considered (sub-half-second wall
-    times are scheduling noise at local[32]); a slowed query whose
-    kernel hash CHANGED is deliberately not labeled — that one may
-    be a real regression and must be investigated, not absolved.
-
-    ``prev``/``unchanged`` are injectable for tests; the defaults
-    read the newest BENCH_DETAIL_LOCAL_r*.json and recompute kernel
-    hashes against KERNEL_BASELINE.json."""
-    baseline_file = None
-    if prev is None:
-        import glob as _glob
-
-        stamped = [
-            (int(m.group(1)), p)
-            for p in _glob.glob(
-                os.path.join(repo_dir, "BENCH_DETAIL_LOCAL_r*.json"))
-            if (m := re.search(r"_r0*(\d+)\.json$", p))
-        ]
-        if not stamped:
-            return {"baseline_file": None, "queries": {}}
-        _, path = max(stamped)
-        baseline_file = os.path.basename(path)
-        with open(path) as f:
-            det = json.load(f)
-        # a ratio across DIFFERENT scale factors is meaningless (an
-        # sf0.001 smoke run would flag overhead-dominated queries as
-        # "bursts" against the sf0.1 local series) — label nothing
-        if sf is not None and det.get("sf") != sf:
-            return {"baseline_file": baseline_file, "queries": {},
-                    "skipped": f"sf mismatch: local detail is sf={det.get('sf')}"}
-        prev = det.get("queries", {})
-    if unchanged is None:
-        try:
-            from tools.kernel_audit import _hashes, _load_baseline
-
-            kb = _load_baseline(repo_dir)
-            unchanged = {
-                name for name, cur in _hashes().items()
-                if kb.get(name, {}).get("hash") == cur["hash"]
-            }
-        except Exception as e:  # label nothing rather than guess
-            print(f"BENCH SUSPECT-HOST HASH ERROR: {e}", file=sys.stderr)
-            unchanged = set()
-    flagged = {}
-    for name, cur in timings.items():
-        p = prev.get(name)
-        if p is None or p < 0.5 or cur < 0:
-            continue
-        ratio = cur / p
-        if ratio > 2.0 and name in unchanged:
-            flagged[name] = {
-                "prev_local_sec": round(p, 3),
-                "sec": round(cur, 3),
-                "ratio": round(ratio, 2),
-            }
-    return {"baseline_file": baseline_file, "queries": flagged}
-
-
 _COMPACT_QUERIES = (
     "q1_pricing_summary",
     "q3_shipping_priority",
@@ -477,13 +293,10 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     registry = load_registry()
-    # Canonical sorted-name execution order, INDEPENDENT of the
-    # _DRIVER_PRIORITY rotation (VERDICT r11 "What's wrong" #4): the
-    # registry's iteration order is reshuffled every round by the
-    # freshness rotation, and position effects (shared tracked caches,
-    # JIT warm-up, page cache) contaminated per-query cross-round
-    # ratios badly enough to need warm-run adjudication each round.
-    # A fixed order makes the per-query series comparable directly.
+    # Sorted-name execution order, not registration order (which
+    # follows module import order and moves when query modules are
+    # regrouped): position effects (JIT warm-up, page cache) then stay
+    # put, so per-query numbers stay comparable across runs.
     headline = {
         name: registry[name] for name in sorted(registry) if registry[name].bench
     }
@@ -521,8 +334,6 @@ def main() -> None:
         print(f"BENCH CONTINUOUS ERROR: {e}", file=sys.stderr)
     time.sleep(2.0)  # let continuous-epoch executor threads finish dying
 
-    calibration = host_calibration(spark)
-
     from wire_spark.queries._util import release_tracked_caches
 
     sc = spark.sparkContext
@@ -558,45 +369,13 @@ def main() -> None:
             release_tracked_caches()
 
     total = round(sum(t for t in timings.values() if t >= 0), 3)
-    # Host-corrected sum: scale the raw total by REF/measured on the
-    # CPU-saturation probe (see host_calibration).  The r13 driver run
-    # proved the old model useless under contention: its additive
-    # per-extra-stage subtraction corrected 340.1 s by exactly 0.0 s
-    # (extra_stage_ms clamped to 0) while the builder's same-code run
-    # summed 165.4 s — a uniform ~2x multiplicative host effect, which
-    # only a multiplicative model can remove.  A 1.3x deadband absorbs
-    # the probe's ambient jitter (±12% across idle-host sessions):
-    # inside it the raw value IS the corrected value, so healthy-host
-    # rounds stay untouched; beyond it the factor is floored at 0.3
-    # (a >3.3x probe blowup means the probe itself is suspect — report
-    # most of the raw drift rather than invent a correction).  All raw
-    # probe values stay in the artifact so any better model can be
-    # applied mechanically later.
-    # second probe AFTER the query loop: a point-in-time probe cannot
-    # see a contention burst that starts mid-run (observed at r14: a
-    # pre-probe of 1888 ms passed the deadband while a ~20-query
-    # stretch ran 2-6x slow).  Correct on the WORSE of the two
-    # bracketing probes; both land in the artifact.
-    calibration_post = host_calibration(spark, cpu_reps=3)
-    calibration["cpu_saturate_post_ms"] = calibration_post["cpu_saturate_ms"]
-    host_factor = host_correction_factor(max(
-        calibration.get("cpu_saturate_ms") or 0.0,
-        calibration_post["cpu_saturate_ms"],
-    ))
-    corrected = round(total * host_factor, 3)
-    suspect = suspect_host_bursts(
-        timings, os.path.dirname(os.path.abspath(__file__)), sf=sf)
     detail = {
         "metric": "headline query wall time, sum over bench set",
         "value": total,
-        "value_host_corrected": corrected,
-        "host_factor": round(host_factor, 4),
         "unit": "sec",
         "queries": timings,
         "query_jobs": query_jobs,
         "query_stages": query_stages,
-        "host_calibration": calibration,
-        "suspect_host": suspect,
         "sf": sf,
         "stream": stream,
         "stream_latency": latency,

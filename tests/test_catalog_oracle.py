@@ -29,21 +29,6 @@ def test_registry_nonempty():
     assert len(REGISTRY) >= 25
 
 
-def test_driver_priority_window():
-    """The driver records rows only for the first 50 names in
-    ``queries()`` iteration order; ``_DRIVER_PRIORITY`` controls that
-    window. It must hold exactly 50 distinct, registered names, and
-    the registry must yield them first.
-    """
-    from wire_spark.catalog import _DRIVER_PRIORITY
-
-    assert len(_DRIVER_PRIORITY) == 50
-    assert len(set(_DRIVER_PRIORITY)) == 50
-    missing = [n for n in _DRIVER_PRIORITY if n not in REGISTRY]
-    assert not missing, f"priority names not registered: {missing}"
-    assert list(REGISTRY)[:50] == list(_DRIVER_PRIORITY)
-
-
 def test_no_hugeint_or_decimal_oracle_outputs(con):
     """DuckDB sum() over integers yields HUGEINT (int128) and bare
     decimal literals yield DECIMAL — both render differently from
@@ -68,14 +53,18 @@ def test_no_hugeint_or_decimal_oracle_outputs(con):
 
 
 def test_entry_contract(spark):
+    """The driver contract yields every registered query in
+    registration order, and an oracle for exactly those that have
+    one."""
     import __spark_entry__ as entry_mod
+    from wire_spark import catalog
 
     df = entry_mod.entry(spark)
     assert df.count() > 0
     qs = entry_mod.queries()
-    oracles = entry_mod.oracle_sql()
-    assert set(oracles) <= set(qs)
-    assert len(qs) >= 25
+    assert list(qs) == list(catalog.REGISTRY)
+    assert all(qs[name] is q.fn for name, q in catalog.REGISTRY.items())
+    assert set(entry_mod.oracle_sql()) == set(_WITH_ORACLE)
 
 
 def test_register_rejects_cross_module_name_collision():

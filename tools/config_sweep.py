@@ -45,19 +45,34 @@ CONFIGS = {
 }
 
 
+def best_totals(runs: list[dict]) -> dict[str, float]:
+    """Per-config MIN total over its clean passes (steady-state
+    estimate, same spirit as the bench's best-of-2).  ``runs`` are the
+    per-(config, pass) records ``main`` prints.  A pass with an
+    errored (-1.0) query sums fewer queries, so it never counts; a
+    config with no clean pass reports -1.0 (errored)."""
+    best: dict[str, float] = {}
+    for run in runs:
+        label = run["config"]
+        best.setdefault(label, -1.0)
+        if any(v < 0 for v in run["queries"].values()):
+            continue
+        prev = best[label]
+        best[label] = run["total"] if prev < 0 else min(prev, run["total"])
+    return best
+
+
 def main() -> None:
     """One fresh session per (pass, config); PASSES interleave the
     configs so a host burst or page-cache warm-up decaying across the
     run cannot masquerade as a config effect (the first single-pass
     run measured exactly that: totals fell 41.9 -> 10.0 s in run
-    order regardless of config).  Per-config headline = MIN total
-    across passes (steady-state estimate, same spirit as the bench's
-    best-of-2)."""
+    order regardless of config).  Per-config headline: ``best_totals``."""
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 2
     passes = int(sys.argv[2]) if len(sys.argv) > 2 else 1
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     registry = load_registry()
-    best: dict[str, float] = {}
+    runs: list[dict] = []
     for p in range(passes):
         for label, conf in CONFIGS.items():
             conf = dict(conf)
@@ -82,13 +97,12 @@ def main() -> None:
                 from wire_spark.queries._util import release_tracked_caches
                 release_tracked_caches()
             total = round(sum(v for v in out.values() if v > 0), 3)
-            print(json.dumps({"config": label, "pass": p, "total": total,
-                              "queries": out}), flush=True)
+            run = {"config": label, "pass": p, "total": total, "queries": out}
+            print(json.dumps(run), flush=True)
+            runs.append(run)
             spark.stop()
-            best[label] = min(best.get(label, float("inf")), total)
     if passes > 1:
-        print(json.dumps({"best_total_per_config":
-                          {k: round(v, 3) for k, v in best.items()}}),
+        print(json.dumps({"best_total_per_config": best_totals(runs)}),
               flush=True)
 
 

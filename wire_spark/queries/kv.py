@@ -82,11 +82,9 @@ def kv_point_lookup(spark, sf_dir):
 
 
 # --------------------------------------------------------------------
-# STAGED (r15 -> register at a later round open, the r14-established
-# pattern): transactional-table lifecycle under one oracle-checked
-# query.  Registering mid-round would displace a forced name from the
-# freshness window; the never-checked-first rule gives staged queries
-# the next open's head slots.
+# STAGED (not registered): transactional-table lifecycle under one
+# oracle-checked query.  It stays out of the catalog until there is a
+# reason to grow it; tests/test_txn.py checks it against the oracle.
 # --------------------------------------------------------------------
 
 TXN_LIFECYCLE_ORACLE = """

@@ -1392,7 +1392,7 @@ def embedding_hard_negatives(spark, sf_dir):
 
 
 # --------------------------------------------------------------------
-# Incremental IVF maintenance off the CDC fold (STAGED for r15)
+# Incremental IVF maintenance off the CDC fold
 # --------------------------------------------------------------------
 
 VECTOR_INDEX_CDC_ORACLE = """
@@ -1437,11 +1437,7 @@ def vector_index_cdc_update(spark, sf_dir):
     (VERDICT r13 endorsed stretch): the reference's streaming-first
     identity (README.md:7) applied to the vector-index surface — the
     index FOLLOWS the change stream instead of being rebuilt per
-    batch.  Staged at r14 (operator + cross-engine test shipped),
-    REGISTERED at the r15 open where the never-checked-first rule
-    gives it the window's head slot — the r14 window was the full
-    50-query r9 cohort at its staleness horizon, so a r14
-    registration would have forced a freshness breach.
+    batch.
 
     Protocol under test, end to end:
 
@@ -1523,7 +1519,7 @@ def vector_index_cdc_update(spark, sf_dir):
 
 
 # --------------------------------------------------------------------
-# Query-from-storage after CDC maintenance (STAGED for r16)
+# Query-from-storage after CDC maintenance (STAGED, not registered)
 # --------------------------------------------------------------------
 
 VECTOR_INDEX_SEARCH_ORACLE = """
@@ -1620,10 +1616,9 @@ def vector_index_search_stored(spark, sf_dir):
     operators/vector_index.py), then answer top-5 queries FROM THE
     STORED index with ``search_index`` — change stream to
     query-from-storage, the loop the reference's streaming-first
-    identity (README.md:7) exists to close.  Staged at r15
-    (@register lands at the r16 open; the r14-established pattern —
-    registering mid-round would displace the r15 window's
-    outputs-changed slack entries).
+    identity (README.md:7) exists to close.  Staged, not registered:
+    it stays out of the catalog until there is a reason to grow it;
+    tests/test_vector_index.py checks it against the oracle.
 
     The change log is the ``vector_index_cdc_update`` protocol
     (updates negate %7, deletes tombstone %13, inserts add reversed
